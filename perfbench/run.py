@@ -62,11 +62,13 @@ def environment(work: str) -> None:
     os.environ["PYSPARK_DRIVER_PYTHON"] = sys.executable
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = HEAP
     os.environ["TMPDIR"] = tmp
+    # spark-submit's launcher JVM: no hsperfdata file under /tmp either
+    os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "local")
     confs = {
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.driver.extraJavaOptions":
-            # no hsperfdata file under /tmp: nothing is written outside the checkout
+            # no hsperfdata file under /tmp: the run writes only inside the checkout
             f"-Djava.io.tmpdir={tmp} -Xms{HEAP} -XX:+AlwaysPreTouch -XX:-UsePerfData",
         "spark.ui.showConsoleProgress": "false",
         # the UI forgets jobs and stages past 1000; a batch pass runs more
