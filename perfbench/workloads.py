@@ -42,8 +42,8 @@ class StreamWorkload:
     drain_file_records: int
     #: offered rate of the paced phase, records/s
     paced_rate: int
-    #: a truncated raw record and a valid one followed by junk bytes,
-    #: for the malformed-input probe: (key, value) pairs
+    #: raw (key, value) records for the malformed-input probe: "good",
+    #: "truncated" and "trailing_junk" (a good record plus junk bytes)
     malformed: Callable[[], dict]
 
 
@@ -61,38 +61,15 @@ def _models(root: str):
 
 
 def avro_workload(root: str) -> StreamWorkload:
-    import pyspark.sql.functions as F
+    import runpy
 
-    from kafka_streams_plumber_spark import Pipeline
     from kafka_streams_plumber_spark.sources.avro_codec import encode_record
 
     in_model, out_model = _models(root)
-
-    def pipeline():
-        # the demo transform (examples/demo/example.py)
-        return Pipeline().map_values(
-            lambda v: F.struct(
-                (~v["notValid"]).alias("valid"),
-                F.lower(v["person"]["name"]).alias("name"),
-                (v["fingers_lh"] + v["fingers_rh"]).alias("fingers"),
-            )
-        )
-
-    def fixtures():
-        return [
-            (None, {"redundantField": 7, "notValid": True,
-                    "fingers_lh": 7, "fingers_rh": 7,
-                    "person": {"name": "roEl", "species": "human"}}),
-            (None, {"redundantField": 127, "notValid": False,
-                    "fingers_lh": 1, "fingers_rh": 3,
-                    "person": {"name": "ROELLL", "species": "homo sapiens"}}),
-        ]
-
-    def expectations():
-        return [
-            (None, {"valid": False, "name": "roel", "fingers": 14}),
-            (None, {"valid": True, "name": "roelll", "fingers": 4}),
-        ]
+    # the demo transform and its golden fixtures, exactly as the
+    # broker-free streaming example runs them
+    demo = runpy.run_path(os.path.join(root, "examples", "streaming", "example.py"))
+    fixtures = demo["fixtures"]
 
     def record(rng: random.Random):
         # name lengths vary from 1 to 64, skewed short
@@ -135,9 +112,9 @@ def avro_workload(root: str) -> StreamWorkload:
         input_value=_avsc(root, "example.undesired.avsc"),
         output_key="void",
         output_value=_avsc(root, "example.desired.avsc"),
-        pipeline=pipeline,
+        pipeline=demo["pipeline"],
         fixtures=fixtures,
-        expectations=expectations,
+        expectations=demo["expectations"],
         records=lambda rng, n: [record(rng) for _ in range(n)],
         encode_input=encode_input,
         expect_output=expect_output,
