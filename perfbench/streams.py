@@ -441,8 +441,8 @@ class StreamRun:
     def run(self) -> None:
         seconds = self.seconds
         wl = self.wl
-        # drain work sized to take drain_s at the rate measured at the
-        # seed commit; the same on every commit
+        # drain work sized to take drain_s at _SEED_RATE; fixed, so the
+        # same on every commit
         drain_s = 0.5 * seconds
         drain_files = max(MIN_DRAIN_FILES, round(drain_s * _SEED_RATE[wl.name]
                                                  / wl.drain_file_records))
@@ -623,7 +623,7 @@ def _bytes(text: str) -> float:
     return 0.0
 
 
-#: drain rate measured at the seed commit (local[4]), records/s; sizes
+#: drain rate when the benchmark was written (local[4]), records/s; sizes
 #: the drain input only
 _SEED_RATE = {"stream_avro": 6500, "stream_scalar": 56000}
 
