@@ -30,7 +30,9 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 #: Spark's local dirs, temp files and run outputs stay in the checkout
 STATE = os.path.join(ROOT, ".perfbench")
-CPUS = 4
+#: local[N]: every micro-batch is one task, and two cores leave room on a
+#: 4-vCPU host for the engine's threads and the Python UDF workers
+CPUS = 2
 HEAP = "1g"
 
 

@@ -10,15 +10,20 @@ micro-batch loop) is the production lifecycle.
 One run is, in order:
 
 1. session start plus a warm-up job (timed: part of ``setup_s``);
-2. three job set-ups, each ``PlumberJob.run`` up to the commit of its
-   first micro-batch over one drain-size file; ``setup_s`` adds their
-   median to step 1;
-3. the backlog drain (closed loop): every input file is present and
-   ``maxFilesPerTrigger=1`` fixes the records per micro-batch;
-4. the paced phase (open loop): a thread releases one file per tick at
-   the workload's offered rate, whatever the job's progress;
-5. untimed: the sink is read back and compared byte for byte with the
-   seeded generator's oracle.
+2. a warm-up drain of ``WARM_S`` seconds, not counted;
+3. ``ROUNDS`` rounds of two phases, each phase a job of its own:
+
+   - the paced phase (open loop): a thread releases one file per tick
+     at the workload's offered rate, whatever the job's progress;
+   - the backlog drain (closed loop): every input file is present and
+     ``maxFilesPerTrigger=1`` fixes the records per micro-batch;
+
+   every job's ``PlumberJob.run`` up to the commit of its first
+   micro-batch is a set-up sample: ``setup_s`` adds their median to
+   step 1. The rounds' samples are pooled, so each metric is taken over
+   most of the run instead of one stretch of it;
+4. untimed, after each phase: the sink is read back and compared byte
+   for byte with the seeded generator's oracle.
 
 With tracing on, the same run also executes the cumulative layer
 prefixes in batch mode over the drain input, reads Python UDF metrics
@@ -41,19 +46,23 @@ from perfbench.host import RssSampler
 from perfbench.workloads import StreamWorkload
 
 RAW_SCHEMA = "key binary, value binary"
-#: the drain's steady rate is taken over its second half: batch times
-#: keep falling for ~20 batches after the first (JIT warm-up)
-STEADY_FROM = 0.5
-#: fewest drain batches (the steady half needs several)
-MIN_DRAIN_FILES = 12
+#: drain and paced phases alternate this many times in a run
+ROUNDS = 2
+#: seconds of uncounted drain before the rounds: batch times keep
+#: falling for several batches after the first (JIT warm-up)
+WARM_S = 6
+#: fewest counted batches of one drain
+MIN_DRAIN_FILES = 6
 #: paced phase: files released per second
 TICKS_PER_S = 10
+#: fewest paced files in a run, so that p90 has ten samples beyond it
+MIN_PACED_FILES = 100
 #: cumulative layer prefixes of the traced batch-mode run
 PREFIXES = ("scan", "decode", "pipeline", "conform", "encode", "sink")
 #: repetitions of each traced prefix (median reported)
 PREFIX_REPS = 3
 #: drain files fed to the traced prefixes (at most)
-PREFIX_FILES = 16
+PREFIX_FILES = 8
 
 
 def write_raw(path: str, rows: list[tuple[bytes | None, bytes | None]]) -> None:
@@ -74,32 +83,40 @@ def write_raw(path: str, rows: list[tuple[bytes | None, bytes | None]]) -> None:
 
 
 class Inputs:
-    """Seeded input files. Each file's records come from its own
-    ``Random(f"{seed}/{name}")`` stream, so the oracle regenerates any
-    file's records instead of keeping them."""
+    """Seeded input files. The ``i``-th file of ``n`` records of every
+    phase is a copy of the same pool file, whose records come from its
+    own ``Random(f"{seed}/{n}/{i}")`` stream; the oracle's prediction
+    for it is made from the same records when the pool file is written."""
 
-    def __init__(self, wl: StreamWorkload, seed: int):
+    def __init__(self, wl: StreamWorkload, seed: int, pool_dir: str):
         self.wl = wl
         self.seed = seed
+        self.pool_dir = pool_dir
+        os.makedirs(pool_dir, exist_ok=True)
         self.sizes: dict[str, int] = {}
+        self._pool: dict[tuple[int, int], list] = {}
+        self._expected: dict[str, list] = {}
 
-    def records(self, name: str) -> list:
-        rng = random.Random(f"{self.seed}/{name}")
-        return self.wl.records(rng, self.sizes[name])
+    def _pool_file(self, n: int, i: int) -> str:
+        path = os.path.join(self.pool_dir, f"{n}-{i:05d}.parquet")
+        if (n, i) not in self._pool:
+            recs = self.wl.records(random.Random(f"{self.seed}/{n}/{i}"), n)
+            write_raw(path, [self.wl.encode_input(k, v) for k, v in recs])
+            expect = self.wl.expect_output
+            self._pool[n, i] = [e for e in (expect(k, v) for k, v in recs) if e is not None]
+        return path
 
-    def write(self, directory: str, name: str, n: int) -> None:
+    def write(self, directory: str, name: str, n: int, i: int = 0) -> None:
+        """Place the ``i``-th pool file of ``n`` records as ``name``."""
+        src = self._pool_file(n, i)
+        tmp = os.path.join(directory, "." + name)
+        shutil.copyfile(src, tmp)
+        os.replace(tmp, os.path.join(directory, name))
         self.sizes[name] = n
-        write_raw(os.path.join(directory, name),
-                  [self.wl.encode_input(k, v) for k, v in self.records(name)])
+        self._expected[name] = self._pool[n, i]
 
     def expected(self, names) -> list:
-        out = []
-        for name in names:
-            for k, v in self.records(name):
-                e = self.wl.expect_output(k, v)
-                if e is not None:
-                    out.append(e)
-        return out
+        return [e for name in names for e in self._expected[name]]
 
 
 def sink_files(out_dir: str) -> tuple[int, list[tuple[str, int]]]:
@@ -180,7 +197,7 @@ class StreamRun:
         self.seconds = seconds
         self.trace = trace
         self.cpus = cpus
-        self.inputs = Inputs(wl, seed)
+        self.inputs = Inputs(wl, seed, os.path.join(work, "pool"))
         self.spans: list[dict] = []
         self.metrics: dict[str, tuple[float, str]] = {}
         self.samples: dict[str, int] = {}
@@ -188,6 +205,13 @@ class StreamRun:
         self.failed = 0
         self.mismatches: list[str] = []
         self.records_in = self.records_out = self.sink_bytes = 0
+        #: per phase, each round's progress events
+        self.progress: dict[str, list[list[dict]]] = {"warm": [], "drain": [], "paced": []}
+        self.drain_rates: list[float] = []
+        self.latencies_ms: list[float] = []
+        self.late: list[float] = []
+        self.backlog_max = 0
+        self.paced_files = 0
 
     # -- spans ------------------------------------------------------------
     def span(self, name: str, start: float, end: float, parent: str | None = None, **attrs):
@@ -213,6 +237,8 @@ class StreamRun:
         self.session_start_s = time.perf_counter() - t0
         # recentProgress keeps only the last 100 batches by default
         spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
+        # one task per micro-batch, as a one-partition source topic gives
+        spark.conf.set("spark.sql.files.minPartitionNum", "1")
         self.spark = spark
         return spark
 
@@ -284,50 +310,48 @@ class StreamRun:
         return d
 
     # -- phases -----------------------------------------------------------
-    def setup_only(self) -> float:
-        d = self.new_dir("setup", "in")
-        self.inputs.write(d, "setup-0.parquet", self.wl.drain_file_records)
-        query, out_dir, ck, s = self.start_job("setup", d, 1)
-        query.stop()
-        self.check_output("setup", out_dir, ck)
-        return s
-
-    def drain(self, n_files: int, seconds: float) -> float:
-        """Closed loop over ``n_files`` present files, one per batch. The
-        work is fixed; ``seconds`` only caps a run that is far slower
-        than the seed (the remaining files are then never read)."""
-        d = self.new_dir("drain", "in")
-        self.timed("generate.drain", lambda: [
-            self.inputs.write(d, f"drain-{i:05d}.parquet", self.wl.drain_file_records)
-            for i in range(n_files)], "generate")
-        query, out_dir, ck, s = self.start_job("drain", d, 1)
+    def drain(self, tag: str, n_files: int, seconds: float, counted: bool = True) -> float:
+        """Closed loop over present files, one per batch: batch 0 (the
+        job's set-up sample), then ``n_files`` batches whose rates are
+        counted if ``counted``. The work is fixed; ``seconds`` only caps
+        a run that is far slower than the seed (the remaining files are
+        then never read)."""
+        d = self.new_dir(tag, "in")
+        total = 1 + n_files
+        self.timed(f"generate.{tag}", lambda: [
+            self.inputs.write(d, f"{tag}-{i:05d}.parquet", self.wl.drain_file_records, i)
+            for i in range(total)], "generate")
+        query, out_dir, ck, s = self.start_job(tag, d, 1)
         t_start = time.time()
-        wait_commit(query, ck, n_files - 1, deadline=t_start + 4 * seconds + 30)
+        wait_commit(query, ck, total - 1, deadline=t_start + 4 * seconds + 30)
+        # a batch's progress event is posted just after its commit
+        deadline = time.time() + 5
         prog = progress_list(query)
+        while prog and prog[-1]["batchId"] < total - 1 and time.time() < deadline:
+            time.sleep(0.01)
+            prog = progress_list(query)
         query.stop()
-        self.span("drain", t_start, time.time(), None)
-        steady = [p for p in prog
-                  if p["batchId"] >= STEADY_FROM * n_files and p["numInputRows"] > 0]
-        rates = [p["numInputRows"] / (p["durationMs"]["triggerExecution"] / 1000.0)
-                 for p in steady]
-        if not rates:
-            raise RuntimeError("drain: no steady micro-batch committed")
-        self.metric("records_per_s", stats.median(rates), "1/s", len(rates))
-        self.drain_progress = prog
-        self.check_output("drain", out_dir, ck)
+        self.span(tag, t_start, time.time(), "drain" if counted else "warm")
+        if counted:
+            self.drain_rates += [
+                p["numInputRows"] / (p["durationMs"]["triggerExecution"] / 1000.0)
+                for p in prog if p["batchId"] >= 1 and p["numInputRows"] > 0]
+        self.progress["drain" if counted else "warm"].append(prog)
+        self.check_output(tag, out_dir, ck)
         return s
 
-    def paced(self, seconds: float) -> float:
+    def paced(self, tag: str, n: int) -> float:
+        """Open loop: ``n`` files released one per tick."""
         wl = self.wl
-        d = self.new_dir("paced", "in")
-        stage = self.new_dir("paced", "stage")
-        self.inputs.write(d, "paced-warm.parquet", wl.drain_file_records)
+        d = self.new_dir(tag, "in")
+        stage = self.new_dir(tag, "stage")
+        self.inputs.write(d, f"{tag}-warm.parquet", wl.drain_file_records)
         per_file = max(1, wl.paced_rate // TICKS_PER_S)
-        n = max(int(seconds * TICKS_PER_S), 100)  # >= 100 files so p90 has 10 beyond
-        names = [f"paced-{i:05d}.parquet" for i in range(n)]
-        self.timed("generate.paced", lambda: [
-            self.inputs.write(stage, name, per_file) for name in names], "generate")
-        query, out_dir, ck, s = self.start_job("paced", d, None)
+        names = [f"{tag}-{i:05d}.parquet" for i in range(n)]
+        self.timed(f"generate.{tag}", lambda: [
+            self.inputs.write(stage, name, per_file, i) for i, name in enumerate(names)],
+            "generate")
+        query, out_dir, ck, s = self.start_job(tag, d, None)
 
         due: dict[str, float] = {}
         late: list[float] = []
@@ -353,28 +377,20 @@ class StreamRun:
         query.processAllAvailable()
         prog = progress_list(query)
         query.stop()
-        self.span("paced", t_start, time.time(), None)
+        self.span(tag, t_start, time.time(), "paced")
 
         file_batch = stats.source_log_batches(os.path.join(ck, "sources", "0"))
         commits = commit_times(ck)
         lat, missing = stats.file_latencies(due, file_batch, commits)
-        if len(lat) < 2:
-            raise RuntimeError("paced: fewer than two files committed")
-        lat_ms = [x * 1000.0 for x in lat]
-        self.metric("event_latency_p50_ms", stats.percentile(lat_ms, 50), "ms", len(lat_ms))
-        self.metric("event_latency_p90_ms", stats.percentile(lat_ms, 90), "ms", len(lat_ms))
-        self.latency_tail = stats.tail_percentile(lat_ms)
-        self.paced_progress = prog
-        self.generator = {
-            "late_ms_max": max(late) * 1000.0,
-            "backlog_files_max": stats.backlog_max(
-                due.values(),
-                [commits.get(file_batch.get(n, -1), float("inf")) for n in names],
-            ),
-            "files": n,
-            "records_per_file": per_file,
-        }
-        self.check_output("paced", out_dir, ck, exclude=set(missing))
+        self.latencies_ms += [x * 1000.0 for x in lat]
+        self.late += late
+        self.backlog_max = max(self.backlog_max, stats.backlog_max(
+            due.values(),
+            [commits.get(file_batch.get(name, -1), float("inf")) for name in names],
+        ))
+        self.paced_files += n
+        self.progress["paced"].append(prog)
+        self.check_output(tag, out_dir, ck, exclude=set(missing))
         return s
 
     # -- oracle -------------------------------------------------------------
@@ -406,14 +422,20 @@ class StreamRun:
             "setup_job_s": getattr(self, "setup_samples", None),
             "session_start_s": getattr(self, "session_start_s", None),
             "latency_tail_ms": getattr(self, "latency_tail", None),
-            "generator": getattr(self, "generator", None),
+            "generator": {
+                "late_ms_max": max(self.late, default=0.0) * 1000.0,
+                "backlog_files_max": self.backlog_max,
+                "files": self.paced_files,
+                "records_per_file": max(1, self.wl.paced_rate // TICKS_PER_S),
+            },
             "phase_s": self.phase_seconds(),
             "rss_at_peak": getattr(self, "rss_at_peak", None),
         }
+        # per phase, per round: (batch id, input rows, trigger ms)
         out["batches"] = {
-            phase: [(p["batchId"], p["numInputRows"], p["durationMs"].get("triggerExecution"))
-                    for p in getattr(self, f"{phase}_progress", [])]
-            for phase in ("drain", "paced")
+            phase: [[(p["batchId"], p["numInputRows"], p["durationMs"].get("triggerExecution"))
+                     for p in prog] for prog in rounds]
+            for phase, rounds in self.progress.items()
         }
         if self.trace:
             out["prefix_records"] = self.prefix_records
@@ -426,7 +448,8 @@ class StreamRun:
         for sp in self.spans:
             if sp["parent"] is None:
                 key = sp["name"]
-            elif sp["parent"] in ("setup", "generate", "oracle", "prefixes"):
+            elif sp["parent"] in ("setup", "generate", "oracle", "prefixes",
+                                  "warm", "drain", "paced"):
                 key = sp["parent"]
             else:
                 continue
@@ -439,20 +462,33 @@ class StreamRun:
 
     # -- the run ------------------------------------------------------------
     def run(self) -> None:
-        seconds = self.seconds
         wl = self.wl
-        # drain work sized to take drain_s at _SEED_RATE; fixed, so the
+        # every phase of every round gets an equal share of the seconds
+        phase_s = self.seconds / (2 * ROUNDS)
+        # drain work sized to take phase_s at _SEED_RATE; fixed, so the
         # same on every commit
-        drain_s = 0.5 * seconds
-        drain_files = max(MIN_DRAIN_FILES, round(drain_s * _SEED_RATE[wl.name]
-                                                 / wl.drain_file_records))
+        per_s = _SEED_RATE[wl.name] / wl.drain_file_records
+        drain_files = max(MIN_DRAIN_FILES, round(phase_s * per_s))
+        warm = round(WARM_S * per_s)
+        paced_files = max(round(phase_s * TICKS_PER_S), -(-MIN_PACED_FILES // ROUNDS))
         with RssSampler() as rss:
             self.timed("session", self.start_session, "setup")
-            setups = [self.setup_only()]
-            setups.append(self.drain(drain_files, drain_s))
-            setups.append(self.paced(seconds - drain_s))
+            setups = [self.drain("warm", warm, WARM_S, counted=False)]
+            for r in range(ROUNDS):
+                setups.append(self.paced(f"paced{r}", paced_files))
+                setups.append(self.drain(f"drain{r}", drain_files, phase_s))
             if self.trace:
                 self.traced_layers()
+        if not self.drain_rates:
+            raise RuntimeError("drain: no counted micro-batch committed")
+        if len(self.latencies_ms) < 2:
+            raise RuntimeError("paced: fewer than two files committed")
+        self.metric("records_per_s", stats.median(self.drain_rates), "1/s",
+                    len(self.drain_rates))
+        lat = self.latencies_ms
+        self.metric("event_latency_p50_ms", stats.percentile(lat, 50), "ms", len(lat))
+        self.metric("event_latency_p90_ms", stats.percentile(lat, 90), "ms", len(lat))
+        self.latency_tail = stats.tail_percentile(lat)
         self.metric("setup_s", self.session_start_s + stats.median(setups), "s", len(setups))
         self.metric("peak_rss_mb", rss.peak / 2**20, "MB")
         self.rss_at_peak = {"processes": rss.at_peak[0], "largest_mb": rss.at_peak[1] / 2**20}
@@ -471,7 +507,8 @@ class StreamRun:
         spark, wl = self.spark, self.wl
         ik, iv = parse_type(wl.input_key), parse_type(wl.input_value)
         ok, ov = parse_type(wl.output_key), parse_type(wl.output_value)
-        d = os.path.join(self.work, "drain", "in")
+        # the drains read copies of the same files
+        d = os.path.join(self.work, "warm", "in")
         files = [os.path.join(d, f) for f in sorted(os.listdir(d))
                  if not f.startswith(".")][:PREFIX_FILES]
 
@@ -586,17 +623,18 @@ class StreamRun:
 
     # -- per-layer numbers from the stream runs ---------------------------------
     def loop_metrics(self) -> None:
-        """Micro-batch loop (paced phase, first batch excluded), the load
-        generator, record counts and sink bytes."""
-        steady = [p for p in self.paced_progress if p["batchId"] >= 1 and p["numInputRows"] > 0]
+        """Micro-batch loop (paced phases, each job's first batch
+        excluded), the load generator, record counts and sink bytes."""
+        steady = [p for prog in self.progress["paced"] for p in prog
+                  if p["batchId"] >= 1 and p["numInputRows"] > 0]
         for key in ("triggerExecution", "addBatch", "walCommit", "commitOffsets",
                     "latestOffset", "queryPlanning"):
             vals = [p["durationMs"].get(key, 0) for p in steady]
             name = "mb_trigger_ms_p50" if key == "triggerExecution" else f"mb_{key}_ms_p50"
             self.metric(name, stats.median(vals) if vals else 0.0, "ms", len(vals))
         self.metric("batches", len(steady), "count")
-        self.metric("generator_late_ms_max", self.generator["late_ms_max"], "ms")
-        self.metric("backlog_files_max", self.generator["backlog_files_max"], "count")
+        self.metric("generator_late_ms_max", max(self.late) * 1000.0, "ms")
+        self.metric("backlog_files_max", self.backlog_max, "count")
         self.metric("records_in", self.records_in, "count")
         self.metric("records_out", self.records_out, "count")
         self.metric("filter_pass_ratio", self.records_out / max(self.records_in, 1), "ratio")
@@ -623,7 +661,7 @@ def _bytes(text: str) -> float:
     return 0.0
 
 
-#: drain rate when the benchmark was written (local[4]), records/s; sizes
+#: drain rate when the benchmark was written (local[2]), records/s; sizes
 #: the drain input only
 _SEED_RATE = {"stream_avro": 6500, "stream_scalar": 56000}
 
