@@ -4,14 +4,27 @@ string, bytes, enum, array, record, union.
 
 Implements the Avro 1.x binary encoding spec directly (zigzag varints,
 little-endian IEEE floats, length-prefixed strings, block-encoded
-arrays, index-prefixed unions). Used as the serde fallback when the JVM
-``spark-avro`` module is not on the classpath (this container ships
-pyspark without it); the JVM ``from_avro``/``to_avro`` path is preferred
-everywhere it exists because this fallback is a row-at-a-time UDF.
+arrays, index-prefixed unions), one value at a time by walking the
+schema model. It is the spec-direct reference: the stream path's wire
+codec is sources/avro_compiled.py (the same semantics compiled per
+schema into Arrow-native code), which is checked against this one
+byte for byte; the benchmark oracle, avro_ocf and registry_decode's
+per-record writer resolution use this one directly.
 
 The codec is driven by the same parsed schema model as conform()
 (sources/avsc.py), so union branch order and enum symbol order are
-preserved exactly.
+preserved exactly. Values have ``spark_type``'s shape: ``[null, T]``
+is a nullable T and an N-way union a dict with one key per non-null
+branch (``branch_name``), exactly one set; encode takes the first
+non-null branch (and also accepts a bare value, written to the first
+branch that accepts it).
+
+Bad input fails loudly: decoding raises :class:`MalformedAvroError`
+("malformed avro payload: ...") on a truncated payload, trailing
+bytes, an out-of-range union/enum index, a negative length, a boolean
+byte other than 0/1, an int/long out of range or invalid UTF-8;
+encoding a null for a type without a null branch raises
+:class:`AvroNullError`, which names the field.
 """
 
 from __future__ import annotations
@@ -26,7 +39,33 @@ from kafka_streams_plumber_spark.operators.conform import (
     Enum,
     Record,
     Union,
+    branch_name,
 )
+
+_INT_RANGE = {T.IntegerType: 1 << 31, T.LongType: 1 << 63}
+
+
+class MalformedAvroError(ValueError):
+    """Payload bytes that are not one complete value of the schema."""
+
+    def __init__(self, detail: str):
+        super().__init__(f"malformed avro payload: {detail}")
+        self.detail = detail
+
+
+class AvroNullError(ValueError):
+    """A null to encode where the Avro type has no null branch."""
+
+    def __init__(self, type_name: str):
+        super().__init__(type_name)
+        self.type_name = type_name
+        #: field names from the failing value up to the root
+        self.path: list[str] = []
+
+    def __str__(self) -> str:
+        where = ".".join(reversed(self.path)) or "<root>"
+        return f"avro encode: null for non-null {self.type_name} at {where}"
+
 
 # ---------------------------------------------------------------------------
 # primitives
@@ -65,12 +104,25 @@ def _zigzag_decode(buf: bytes, pos: int) -> tuple[int, int]:
 
 
 def encode_value(v: Any, schema: Any) -> bytes:
+    if v is None and not isinstance(schema, (T.NullType, Union)):
+        raise AvroNullError(branch_name(schema))
     if isinstance(schema, T.NullType):
         return b""
     if isinstance(schema, Union):
+        if v is not None and _is_branch_struct(v, schema):
+            # spark_type's struct of branches: the first non-null branch
+            get = _getter(v)
+            v = None
+            for i, branch in enumerate(schema.branches):
+                if not isinstance(branch, T.NullType):
+                    x = get(branch_name(branch))
+                    if x is not None:
+                        return _zigzag_encode(i) + encode_value(x, branch)
         for i, branch in enumerate(schema.branches):
             if _branch_accepts(v, branch):
                 return _zigzag_encode(i) + encode_value(v, branch)
+        if v is None:
+            raise AvroNullError("union")
         raise ValueError(f"no union branch for {v!r}")
     if isinstance(schema, T.BooleanType):
         return b"\x01" if v else b"\x00"
@@ -98,17 +150,34 @@ def encode_value(v: Any, schema: Any) -> bytes:
         return out + _zigzag_encode(0)
     if isinstance(schema, Record):
         out = b""
-        get = (
-            v.get
-            if isinstance(v, dict)
-            else (lambda k, _row=v: _row[k] if k in _row.__fields__ else None)
-            if hasattr(v, "__fields__")
-            else (lambda k, _o=v: getattr(_o, k, None))
-        )
+        get = _getter(v)
         for f in schema.fields:
-            out += encode_value(get(f.name), f.type)
+            try:
+                out += encode_value(get(f.name), f.type)
+            except AvroNullError as e:
+                e.path.append(f.name)
+                raise
         return out
     raise NotImplementedError(f"avro encode: {schema!r}")
+
+
+def _getter(v: Any):
+    """Field lookup on a dict, a Row or an object; absent fields are None."""
+    if isinstance(v, dict):
+        return v.get
+    if hasattr(v, "__fields__"):
+        return lambda k: v[k] if k in v.__fields__ else None
+    return lambda k: getattr(v, k, None)
+
+
+def _is_branch_struct(v: Any, schema: Union) -> bool:
+    """``v`` is spark_type's struct of an N-way union's branches: a dict
+    or Row whose keys are all branch names."""
+    nn = schema.non_null
+    if len(nn) == 1:
+        return False
+    keys = v.keys() if isinstance(v, dict) else getattr(v, "__fields__", None)
+    return keys is not None and set(keys) <= {branch_name(b) for b in nn}
 
 
 def _branch_accepts(v: Any, branch: Any) -> bool:
@@ -135,27 +204,53 @@ def _branch_accepts(v: Any, branch: Any) -> bool:
     return False
 
 
+def _index(i: int, n: int, what: str) -> int:
+    if not 0 <= i < n:
+        raise MalformedAvroError(f"{what} index {i} out of range")
+    return i
+
+
 def decode_value(buf: bytes, pos: int, schema: Any) -> tuple[Any, int]:
     if isinstance(schema, T.NullType):
         return None, pos
     if isinstance(schema, Union):
         idx, pos = _zigzag_decode(buf, pos)
-        return decode_value(buf, pos, schema.branches[idx])
+        branches = schema.branches
+        branch = branches[_index(idx, len(branches), "union")]
+        v, pos = decode_value(buf, pos, branch)
+        nn = schema.non_null
+        if len(nn) == 1 or isinstance(branch, T.NullType):
+            return v, pos
+        # N-way: spark_type's struct of branches, exactly one set
+        return {
+            branch_name(b): v if j == idx else None
+            for j, b in enumerate(branches)
+            if not isinstance(b, T.NullType)
+        }, pos
     if isinstance(schema, T.BooleanType):
-        return buf[pos] == 1, pos + 1
+        b = buf[pos]
+        if b > 1:
+            raise MalformedAvroError(f"boolean byte {b}")
+        return b == 1, pos + 1
     if isinstance(schema, (T.IntegerType, T.LongType)):
-        return _zigzag_decode(buf, pos)
+        v, pos = _zigzag_decode(buf, pos)
+        lim = _INT_RANGE[type(schema)]
+        if not -lim <= v < lim:
+            raise MalformedAvroError(f"{branch_name(schema)} {v} out of range")
+        return v, pos
     if isinstance(schema, T.FloatType):
         return struct.unpack_from("<f", buf, pos)[0], pos + 4
     if isinstance(schema, T.DoubleType):
         return struct.unpack_from("<d", buf, pos)[0], pos + 8
     if isinstance(schema, (T.StringType, T.BinaryType)):
         n, pos = _zigzag_decode(buf, pos)
+        if not 0 <= n <= len(buf) - pos:
+            raise MalformedAvroError(f"length {n} past the payload")
         raw = bytes(buf[pos : pos + n])
         return (raw.decode("utf-8") if isinstance(schema, T.StringType) else raw), pos + n
     if isinstance(schema, Enum):
         idx, pos = _zigzag_decode(buf, pos)
-        return schema.symbols[idx], pos
+        return schema.symbols[_index(idx, len(schema.symbols), "enum")], pos
     if isinstance(schema, Array):
         items = []
         while True:
@@ -181,5 +276,13 @@ def encode_record(v: Any, schema: Record) -> bytes:
 
 
 def decode_record(buf: bytes, schema: Record) -> dict:
-    out, _ = decode_value(bytes(buf), 0, schema)
+    """Decode one complete payload; anything but exactly one value of
+    ``schema`` raises :class:`MalformedAvroError`."""
+    buf = bytes(buf)
+    try:
+        out, pos = decode_value(buf, 0, schema)
+    except (IndexError, struct.error, UnicodeDecodeError) as e:
+        raise MalformedAvroError(f"truncated or corrupt ({e})") from None
+    if pos != len(buf):
+        raise MalformedAvroError(f"{len(buf) - pos} trailing bytes")
     return out

@@ -4,7 +4,14 @@ columns — parity with the reference's MappingType serde layer
 
 Four wire types (SURVEY.md §1.2): long (8-byte big-endian), string
 (UTF-8), avro (Confluent-framed, schema from .avsc), void (always NULL).
-All decode/encode paths are pure column expressions.
+long, string and void are pure column expressions. avro takes the JVM
+``from_avro``/``to_avro`` when the spark-avro module is on the
+classpath; without it (this pyspark build) each direction is one
+``arrow_udf`` running a codec compiled from the schema
+(sources/avro_compiled.py). sources/avro_codec.py, the row-at-a-time
+interpreter, is the spec-direct reference that codec is tested against
+and the decoder of :func:`registry_decode`'s per-record writer schemas.
+A malformed payload fails the task with ``MalformedAvroError``.
 
 Type strings parse exactly like the reference CLI (`string`,
 `long`, `avro=file.avsc`, `avro`, `void` — TypeConversions.scala:42-51):
@@ -113,7 +120,9 @@ def decode(
             from pyspark.sql.avro.functions import from_avro
 
             return from_avro(payload, wt.avsc)
-        return _py_avro_decode(payload, wt)
+        from kafka_streams_plumber_spark.sources.avro_compiled import decode_udf
+
+        return decode_udf(wt.model)(payload)
     raise AssertionError(wt.kind)
 
 
@@ -139,7 +148,9 @@ def encode(col: Column, wt: WireType, *, confluent_framing: bool = False,
 
             body = to_avro(col, wt.avsc)
         else:
-            body = _py_avro_encode(col, wt)
+            from kafka_streams_plumber_spark.sources.avro_compiled import encode_udf
+
+            body = encode_udf(wt.model)(col)
         if confluent_framing or wt.registry_resolved:
             # registry-resolved types frame with their registered id
             # (GenericAvroSerializer.scala:30-40)
@@ -195,26 +206,6 @@ def _jvm_avro_available() -> bool:
     return _JVM_AVRO
 
 
-def _py_avro_decode(payload: Column, wt: WireType) -> Column:
-    """Fallback when the JVM spark-avro module is absent (this container):
-    spec-correct pure-Python codec (sources/avro_codec.py). Arrow-batched
-    (useArrow): the per-record decode is inherently Python, but batches
-    move over Arrow instead of per-row pickle — the 10-100x serde
-    overhead is gone. (A struct-returning pandas_udf cannot represent a
-    NULL struct row, which a Kafka tombstone requires, so the Arrow
-    scalar UDF is the correct vectorization here.) Prefer the JVM
-    spark-avro path on real clusters."""
-    from kafka_streams_plumber_spark.sources.avro_codec import decode_record
-
-    model = wt.model
-    out_type = spark_type(model)
-
-    def _dec(b, _model=model):
-        return None if b is None else decode_record(b, _model)
-
-    return _arrow_udf(_dec, out_type)(payload)
-
-
 def registry_decode(col: Column, wt: WireType, registry) -> Column:
     """Decode Confluent-framed avro with PER-RECORD writer-schema
     resolution (GenericAvroSerializer.scala:9-73 semantics): read the
@@ -230,7 +221,12 @@ def registry_decode(col: Column, wt: WireType, registry) -> Column:
     heterogeneous topics; homogeneous topics take the JVM path in
     :func:`decode`.
     """
-    from kafka_streams_plumber_spark.operators.conform import Array, Record, Union
+    from kafka_streams_plumber_spark.operators.conform import (
+        Array,
+        Record,
+        Union,
+        branch_name,
+    )
     from kafka_streams_plumber_spark.sources.avro_codec import decode_record
 
     reader = wt.model
@@ -253,6 +249,18 @@ def registry_decode(col: Column, wt: WireType, registry) -> Column:
         if isinstance(rmodel, Array):
             welem = wmodel.element if isinstance(wmodel, Array) else None
             return [_reconcile(x, welem, rmodel.element) for x in v]
+        if isinstance(rmodel, Union) and len(rmodel.non_null) != 1:
+            # N-way: a struct of branches, matched to the writer's by name
+            wnn = wmodel.non_null if isinstance(wmodel, Union) else (wmodel,)
+            wmap = {branch_name(b): b for b in wnn}
+            if len(wnn) == 1:  # the writer wrote one branch's bare value
+                v = {branch_name(wnn[0]): v}
+            return {
+                branch_name(b): _reconcile(
+                    v.get(branch_name(b)), wmap.get(branch_name(b)), b
+                )
+                for b in rmodel.non_null
+            }
         if isinstance(rmodel, Union):
             # unions reconcile against the first structured branch; scalar
             # branches pass through untouched
@@ -284,25 +292,12 @@ def registry_decode(col: Column, wt: WireType, registry) -> Column:
     return _arrow_udf(_dec, out_type)(col)
 
 
-def _py_avro_encode(col: Column, wt: WireType) -> Column:
-    from pyspark.sql import types as T
-
-    from kafka_streams_plumber_spark.sources.avro_codec import encode_record
-
-    model = wt.model
-
-    def _enc(v, _model=model):
-        # struct input arrives as Row (pickled path) or dict (Arrow
-        # path); encode_record accepts both
-        return None if v is None else encode_record(v, _model)
-
-    return _arrow_udf(_enc, T.BinaryType())(col)
-
-
 def _arrow_udf(fn, out_type):
-    """F.udf with Arrow batch transfer when this build supports it
-    (Spark >= 3.5), plain pickled UDF otherwise. Identical null/struct
-    semantics either way — useArrow changes only the wire format."""
+    """Row-at-a-time F.udf with Arrow batch transfer when this build
+    supports it (Spark >= 3.5), plain pickled UDF otherwise. Identical
+    null/struct semantics either way — useArrow changes only the wire
+    format. Only registry_decode uses it: its writer schema is known
+    per record, so there is no one schema to compile."""
     try:
         return F.udf(fn, out_type, useArrow=True)
     except TypeError:

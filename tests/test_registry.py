@@ -112,6 +112,30 @@ def test_registry_decode_heterogeneous_writers(spark):
     assert got == {(7, None), (8, "x"), None}
 
 
+def test_registry_decode_nway_union_reader(spark):
+    """An N-way union reader field decodes to its struct of branches,
+    whether the writer wrote that union or a ``[null, long]`` one."""
+    def schema(u):
+        return json.dumps({"type": "record", "name": "m", "fields": [
+            {"name": "a", "type": "long"}, {"name": "u", "type": u}]})
+
+    narrow, wide = schema(["null", "long"]), schema(["null", "long", "string"])
+    reg = FakeSchemaRegistry()
+    id1 = reg.register("t-value", narrow)
+    id2 = reg.register("t-value", wide)
+    wt = resolve_registry_type(parse_type("avro"), reg, "t-value")
+    rows = [
+        (_framed(id1, narrow, {"a": 1, "u": 5}),),
+        (_framed(id2, wide, {"a": 2, "u": "x"}),),
+        (_framed(id2, wide, {"a": 3, "u": None}),),
+    ]
+    df = spark.createDataFrame(rows, "value binary")
+    out = df.select(decode(F.col("value"), wt, registry=reg).alias("v")).collect()
+    got = sorted((r["v"]["a"], r["v"]["u"] and r["v"]["u"].asDict()) for r in out)
+    assert got == [(1, {"long": 5, "string": None}), (2, {"long": None, "string": "x"}),
+                   (3, None)]
+
+
 def test_registry_encode_frames_with_registered_id(spark):
     reg = FakeSchemaRegistry()
     sid = reg.register("out-value", V1)

@@ -2,10 +2,22 @@
 
 from __future__ import annotations
 
+import os
+import re
+import runpy
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import Row
+from pyspark.util import PythonEvalType
 
+from kafka_streams_plumber_spark.sources.avro_codec import (
+    AvroNullError,
+    MalformedAvroError,
+    decode_record,
+    encode_record,
+)
+from kafka_streams_plumber_spark.sources.avro_compiled import decode_udf, encode_udf
 from kafka_streams_plumber_spark.sources.serde import (
     WireType,
     decode,
@@ -13,6 +25,7 @@ from kafka_streams_plumber_spark.sources.serde import (
     parse_type,
     spark_type_of,
 )
+from kafka_streams_plumber_spark.streaming.runner import PlumberJob
 
 DEMO_AVSC = """
 {"type":"record","name":"Rec","fields":[
@@ -96,3 +109,90 @@ def test_spark_type_of():
     assert spark_type_of(WireType("long")) == T.LongType()
     assert spark_type_of(WireType("string")) == T.StringType()
     assert isinstance(spark_type_of(WireType("avro", DEMO_AVSC)), T.StructType)
+
+
+NWAY_AVSC = """
+{"type":"record","name":"Rec","fields":[
+  {"name":"id","type":"long"},
+  {"name":"u","type":["null","long","string"]}]}
+"""
+
+
+def test_avro_nway_union_roundtrip(spark):
+    """An N-way union decodes to spark_type's struct of branches and
+    encodes back from it: the first non-null branch, else null."""
+    wt = WireType("avro", NWAY_AVSC)
+    raw = [
+        encode_record(v, wt.model)
+        for v in ({"id": 1, "u": 5}, {"id": 2, "u": "five"}, {"id": 3, "u": None})
+    ]
+    df = spark.createDataFrame([(b,) for b in raw], "b binary")
+    rows = (
+        df.select(decode(F.col("b"), wt).alias("v"))
+        .select("v", encode(F.col("v"), wt).alias("b"))
+        .collect()
+    )
+    assert [r.v for r in rows] == [
+        Row(id=1, u=Row(long=5, string=None)),
+        Row(id=2, u=Row(long=None, string="five")),
+        Row(id=3, u=None),
+    ]
+    assert [bytes(r.b) for r in rows] == raw
+
+
+@pytest.mark.parametrize("damage", ["truncated", "trailing_junk"])
+def test_avro_malformed_payload_fails_loud(spark, damage):
+    wt = WireType("avro", DEMO_AVSC)
+    good = encode_record({"name": "roel", "n": 14}, wt.model)
+    bad = good[:-1] if damage == "truncated" else good + b"\x07junk"
+    with pytest.raises(MalformedAvroError, match="malformed avro payload"):
+        decode_record(bad, wt.model)
+    # the bad payload first: a truncated read must not run on into the next
+    df = spark.createDataFrame([(bad,), (good,)], "b binary")
+    with pytest.raises(Exception, match="malformed avro payload"):
+        df.select(decode(F.col("b"), wt)).collect()
+
+
+def test_avro_encode_null_into_non_null_field_is_named(spark):
+    wt = WireType("avro", DEMO_AVSC)
+    with pytest.raises(AvroNullError, match="null for non-null long at n"):
+        encode_record({"name": "x", "n": None}, wt.model)
+    df = spark.createDataFrame(
+        [(Row(name="x", n=None),)], "v struct<name:string, n:long>"
+    )
+    with pytest.raises(Exception, match="null for non-null long at n"):
+        df.select(encode(F.col("v"), wt)).collect()
+
+
+def test_demo_job_codecs_are_arrow_udfs_in_the_executed_plan(spark):
+    """Pins the compiled codec: the demo job's decode and encode are
+    scalar arrow_udfs, and its executed plan has exactly those two
+    Python evaluations, with no row-at-a-time BatchEvalPython."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ex = runpy.run_path(os.path.join(root, "examples", "streaming", "example.py"))
+    in_v = parse_type(f"avro={ex['IN_AVSC']}")
+    out_v = parse_type(f"avro={ex['OUT_AVSC']}")
+    arrow = PythonEvalType.SQL_SCALAR_ARROW_UDF
+    assert decode_udf(in_v.model).evalType == arrow
+    assert encode_udf(out_v.model).evalType == arrow
+
+    void = WireType("void")
+    job = PlumberJob(spark, ex["pipeline"](), "", "in", "out", void, in_v, void, out_v)
+    raw = spark.createDataFrame(
+        [(None, encode_record(v, in_v.model)) for _k, v in ex["fixtures"]()],
+        "key binary, value binary",
+    )
+    typed = raw.select(
+        decode(F.col("key"), job.input_key).alias("key"),
+        decode(F.col("value"), job.input_value).alias("value"),
+    )
+    out = job._transformed(typed).select(  # noqa: SLF001
+        encode(F.col("key"), job.output_key).alias("key"),
+        encode(F.col("value"), job.output_value).alias("value"),
+    )
+    assert [bytes(r.value) for r in out.collect()] == [
+        encode_record(v, out_v.model) for _k, v in ex["expectations"]()
+    ]
+    plan = out._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    assert re.findall(r"ArrowEvalPython .*, (\d+)$", plan, re.M) == [str(arrow)] * 2
+    assert "BatchEvalPython" not in plan
